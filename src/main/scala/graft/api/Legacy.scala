@@ -44,6 +44,6 @@ object Legacy {
       SimilarityStore.writeCorrelatedItems(dictionary, storePath)
     def populateSimilarItems(): Unit =
       SimilarityStore.writeSimilarItems(
-        StoreBuild.scaledNeighbors(model.crosstab), storePath)
+        StoreBuild.scaledNeighborsFromStats(model.stats), storePath)
   }
 }

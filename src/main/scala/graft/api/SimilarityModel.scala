@@ -1,7 +1,7 @@
 package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import graft.core.{Correlation, Crosstab, Neighbors}
+import graft.core.{Correlation, Crosstab, Incremental, Neighbors}
 import graft.store.{Serving, SimilarityStore}
 
 /**
@@ -9,6 +9,16 @@ import graft.store.{Serving, SimilarityStore}
  * (`/root/reference/propius/__init__.py:27-46`, and the documented
  * `SimilarityModel` surface in `docs/api/sim-model.md:3-10`:
  * build / as_dataframe / save / store_in_db), over the functional core.
+ *
+ * One path, whatever the model came from:
+ *
+ *   fit(occurrences) / fromCrosstab(ct)   — stats built lazily from cells
+ *   fromStats(snapshot) / updated / retracted — stats given (resume)
+ *        ↓
+ *   `stats`: the sufficient-statistics snapshot (`Incremental.Stats`)
+ *        ↓
+ *   pairs / topK / save (`Incremental.pairs`) or
+ *   storeAllIn (`StoreBuild.scaledNeighborsFromStats`)
  *
  * Train (EP-1):  SimilarityModel.fit(occurrences)
  * Store (EP-2):  model.storeIn(path, dictionary)
@@ -19,35 +29,34 @@ object SimilarityModel {
   /** `build_similarity_matrix` (`similarity.py:92-117`): occurrences →
     * crosstab → correlation model. Lazy — nothing runs until an action. */
   def fit(occurrences: DataFrame): SimilarityModel =
-    new SimilarityModel(Crosstab.build(occurrences))
+    fromCrosstab(Crosstab.build(occurrences))
 
   def fromCrosstab(crosstab: DataFrame): SimilarityModel =
-    new SimilarityModel(crosstab)
+    new SimilarityModel(crosstab, Incremental.fromCells(crosstab))
 
   /** Incremental EP-1 — the ingest loop the reference cannot run (it
     * rebuilds from the full log every time): resume from a
     * sufficient-statistics snapshot (`graft.core.Incremental.load`) and
-    * serve/store from it. `pairs` reuses the snapshot's persisted
-    * co-moments instead of re-deriving them from the crosstab. */
-  def fromStats(stats: graft.core.Incremental.Stats): SimilarityModel =
-    new SimilarityModel(stats.cells, Some(stats))
+    * serve/store from its persisted summaries. */
+  def fromStats(stats: Incremental.Stats): SimilarityModel =
+    new SimilarityModel(stats.cells, stats)
 
   /** One ingest step: fold a delta occurrence log into a snapshot and
     * return the refreshed model plus the snapshot to persist for the
     * next ingest. */
-  def updated(stats: graft.core.Incremental.Stats,
-              deltaOccurrences: DataFrame): (SimilarityModel, graft.core.Incremental.Stats) = {
-    val next = graft.core.Incremental.update(stats, deltaOccurrences)
+  def updated(stats: Incremental.Stats,
+              deltaOccurrences: DataFrame): (SimilarityModel, Incremental.Stats) = {
+    val next = Incremental.update(stats, deltaOccurrences)
     (fromStats(next), next)
   }
 
   /** The inverse ingest step: retract an occurrence log (deletions /
-    * corrections — `graft.core.Incremental.retract`); the refreshed
+    * corrections — `Incremental.retract`); the refreshed
     * model is bit-identical to one rebuilt over the surviving history
     * (q98-gated). Removed occurrences must exist in the folded history. */
-  def retracted(stats: graft.core.Incremental.Stats,
-                removedOccurrences: DataFrame): (SimilarityModel, graft.core.Incremental.Stats) = {
-    val next = graft.core.Incremental.retract(stats, removedOccurrences)
+  def retracted(stats: Incremental.Stats,
+                removedOccurrences: DataFrame): (SimilarityModel, Incremental.Stats) = {
+    val next = Incremental.retract(stats, removedOccurrences)
     (fromStats(next), next)
   }
 
@@ -64,18 +73,16 @@ object SimilarityModel {
   }
 }
 
-final class SimilarityModel private (
-    val crosstab: DataFrame,
-    precomputed: Option[graft.core.Incremental.Stats] = None) {
+final class SimilarityModel private (val crosstab: DataFrame,
+                                     snapshot: => Incremental.Stats) {
   import org.apache.spark.sql.functions._
 
-  /** Scalable correlation pairs (co-occurring, symmetric, self excluded).
-    * A model resumed from a statistics snapshot serves them from the
-    * persisted item-stats/co-moment summaries — no crosstab recompute. */
-  def pairs: DataFrame = precomputed match {
-    case Some(st) => graft.core.Incremental.pairs(st)
-    case None => Correlation.sparsePairs(crosstab)
-  }
+  /** The model's sufficient statistics; built from the crosstab on first
+    * use by a fitted model, the given snapshot for a resumed one. */
+  private[api] lazy val stats: Incremental.Stats = snapshot
+
+  /** Scalable correlation pairs (co-occurring, symmetric, self excluded). */
+  def pairs: DataFrame = Incremental.pairs(stats)
 
   /** Reference-parity full vectors for selected items (SURVEY §7.4.10). */
   def fullPairs(itemPredicate: Column): DataFrame =
@@ -117,13 +124,8 @@ final class SimilarityModel private (
     * full-catalog build. */
   def storeAllIn(path: String, dictionary: DataFrame, k: Double = 2.0): Unit = {
     SimilarityStore.writeCorrelatedItems(dictionary, path)
-    // A model resumed from a statistics snapshot refreshes the store from
-    // the persisted summaries — no co-moment recompute (q57-gated).
-    val thresholded = precomputed match {
-      case Some(st) => graft.core.StoreBuild.scaledNeighborsFromStats(st, k)
-      case None => graft.core.StoreBuild.scaledNeighbors(crosstab, k)
-    }
-    SimilarityStore.writeSimilarItems(thresholded, path)
+    SimilarityStore.writeSimilarItems(
+      graft.core.StoreBuild.scaledNeighborsFromStats(stats, k), path)
   }
 
   /** `save_correlation_matrix` parity (OP-04) — long-form pairs, CSV. */
@@ -143,8 +145,7 @@ final class SimilarityModel private (
     require(itemIds.length <= maxItems,
       s"wideMatrix is a small-catalog debug view (${itemIds.length} items > $maxItems); " +
         "use pairs/fullPairs at scale")
-    val st = Correlation.itemStats(crosstab)
-      .crossJoin(broadcast(Correlation.nContexts(crosstab)))
+    val st = stats.items.crossJoin(broadcast(stats.n))
     val diag = st.select(col("item").as("item_a"), col("item").as("item_b"),
       when(col("n") * col("sxx") - col("sx") * col("sx") > 0.0, lit(1.0))
         .otherwise(lit(null).cast("double")).as("corr"))

@@ -61,9 +61,11 @@ object Correlation {
   }
 
   /** The Pearson expression from co-moments; zero-variance denominators →
-    * NULL (the engine's normalization of the reference's NaN, SURVEY §7.4.1). */
-  private def corrExpr(n: Column, sxy: Column, sxA: Column, sxxA: Column,
-                       sxB: Column, sxxB: Column): Column = {
+    * NULL (the engine's normalization of the reference's NaN, SURVEY §7.4.1).
+    * The one copy of the arithmetic: `StoreBuild` scores with it too, so
+    * the store and the pair table agree term for term. */
+  private[core] def corrExpr(n: Column, sxy: Column, sxA: Column, sxxA: Column,
+                             sxB: Column, sxxB: Column): Column = {
     val den = sqrt(n * sxxA - sxA * sxA) * sqrt(n * sxxB - sxB * sxB)
     when(den === 0.0 || isnan(den), lit(null).cast("double"))
       .otherwise((n * sxy - sxA * sxB) / den)
@@ -95,11 +97,11 @@ object Correlation {
   }
 
   /**
-   * Pearson pairs from a sufficient-statistics triple — the shared tail of
-   * `sparsePairs` and the incremental path (`Incremental.pairs`): item
-   * stats (item, sx, sxx), upper-triangle co-moments (item_a, item_b,
-   * sxy), and the 1-row context count. Item stats are small (one row per
-   * item) — broadcast both joins; n is a 1-row broadcast.
+   * Pearson pairs from a sufficient-statistics triple (`Incremental.Stats`,
+   * read through `Incremental.pairs`): item stats (item, sx, sxx),
+   * upper-triangle co-moments (item_a, item_b, sxy), and the 1-row context
+   * count. Item stats are small (one row per item) — broadcast both joins;
+   * n is a 1-row broadcast.
    */
   def pairsFromStats(st: DataFrame, co: DataFrame, n: DataFrame): DataFrame = {
     val sym = co.unionByName(
@@ -117,27 +119,16 @@ object Correlation {
 
   /**
    * Scalable path: correlations for CO-OCCURRING pairs, symmetric output
-   * (both (a,b) and (b,a)), self excluded.
+   * (both (a,b) and (b,a)), self excluded — `Incremental.pairs` over the
+   * crosstab's snapshot. The salted join and the degree cap replace only
+   * the co-moment layout; item stats and n stay catalog-wide.
    */
-  def sparsePairs(crosstab0: DataFrame, maxContextDegree: Option[Int] = None,
-                  saltedWith: Option[Int] = None): DataFrame = {
-    // The crosstab feeds three independent aggregations (item stats,
-    // pair co-moments, context count); Catalyst has no cross-branch
-    // subplan reuse, so persist it — MEMORY_AND_DISK spills cleanly when
-    // the cell table outgrows executor memory at scale. `cacheOnce`
-    // reuses an already-cached equal plan instead of re-persisting.
-    val crosstab = Caches.cacheOnce(crosstab0)
-    // The salted join computes the SAME integer-exact co-moment sums over
-    // a skew-resistant shuffle layout — oracle-identical output.
-    val co = saltedWith match {
-      case Some(salts) => saltedCoMoments(crosstab, salts)
-      case None => sparseCoMoments(crosstab, maxContextDegree)
-    }
-    // Cache the RESULT too: several queries consume the same pair table
-    // (raw, top-k, matrix export), and CacheManager dedups by canonical
-    // plan, so they share one materialization per session.
-    Caches.cacheOnce(pairsFromStats(itemStats(crosstab), co, nContexts(crosstab)))
-  }
+  def sparsePairs(crosstab: DataFrame, maxContextDegree: Option[Int] = None,
+                  saltedWith: Option[Int] = None): DataFrame =
+    Incremental.pairs(Incremental.fromCells(crosstab, ct => saltedWith match {
+      case Some(salts) => saltedCoMoments(ct, salts)
+      case None => sparseCoMoments(ct, maxContextDegree)
+    }))
 
   /** Skew decision from `probeSkew`: how the co-moment self-join should
     * be laid out for this crosstab's context-degree distribution. */
@@ -194,8 +185,8 @@ object Correlation {
    * use `sparsePairs` + `Neighbors.topK` for the all-items kNN path).
    */
   def fullPairs(crosstab0: DataFrame, itemPredicate: Column): DataFrame = {
-    val crosstab = Caches.cacheOnce(crosstab0) // see sparsePairs
-    val st = itemStats(crosstab)
+    val stats = Incremental.fromCells(crosstab0)
+    val (crosstab, st) = (stats.cells, stats.items)
     // Predicate pushdown INTO the co-moment join: only the selected items'
     // cells enter the ctx self-join (broadcast semi-join against the small
     // selected-item set), so the quadratic pair work scales with
@@ -213,7 +204,6 @@ object Correlation {
     val left = st.where(itemPredicate) // predicate over column "item"
       .select(col("item").as("item_a"), col("sx").as("sx_a"), col("sxx").as("sxx_a"))
     val right = st.select(col("item").as("item_b"), col("sx").as("sx_b"), col("sxx").as("sxx_b"))
-    val n = nContexts(crosstab)
     // Result cached: the full-vector table for one predicate feeds several
     // downstream queries (raw stats, store thresholding, store stats,
     // moments) — plan-equal calls share one materialization per session.
@@ -221,7 +211,7 @@ object Correlation {
       .where(col("item_a") =!= col("item_b"))
       .join(symSel, Seq("item_a", "item_b"), "left")
       .na.fill(0.0, Seq("sxy"))
-      .crossJoin(broadcast(n))
+      .crossJoin(broadcast(stats.n))
       .select(col("item_a"), col("item_b"),
         corrExpr(col("n"), col("sxy"), col("sx_a"), col("sxx_a"),
                  col("sx_b"), col("sxx_b")).as("corr")))

@@ -56,16 +56,23 @@ object Incremental {
     * what the reference does on EVERY ingest; here it runs once). */
   def fromOccurrences(occ: DataFrame): Stats = fromCells(Crosstab.build(occ))
 
-  /** Build a snapshot from an existing crosstab cell table. The item-stat
-    * and co-moment summaries are session-cached (same policy as
-    * `sparsePairs`' result cache): they are the model state, and every
-    * consumer — pairs, the next delta update, a store build — reads them
-    * repeatedly. MEMORY_AND_DISK spills when the pair summary outgrows
-    * executor memory. */
-  def fromCells(cells0: DataFrame): Stats = {
+  /** Build a snapshot from an existing crosstab cell table — the ONE place
+    * the chain's inputs (per-item stats, pair co-moments, context count)
+    * are derived from cells; every correlation and store-build consumer
+    * reads them from here. The summaries are session-cached: they are the
+    * model state, and every consumer — pairs, the next delta update, a
+    * store build — reads them repeatedly. MEMORY_AND_DISK spills when the
+    * pair summary outgrows executor memory.
+    *
+    * `coMoments` lays out the ctx self-join behind `co` (the plain
+    * sparse join by default; `Correlation.sparsePairs` passes its salted
+    * or degree-capped layout). Every layout sums the same integer
+    * products, so only the shuffle shape differs. */
+  def fromCells(cells0: DataFrame,
+                coMoments: DataFrame => DataFrame = Correlation.sparseCoMoments(_)): Stats = {
     val cells = Caches.cacheOnce(cells0) // feeds three aggregations
     Stats(cells, Caches.cacheOnce(Correlation.itemStats(cells)),
-      Caches.cacheOnce(Correlation.sparseCoMoments(cells)),
+      Caches.cacheOnce(coMoments(cells)),
       // 1 row, but its plan is a full distinct over the cell table —
       // and every broadcast that consumes it re-executes it uncached
       Caches.cacheOnce(Correlation.nContexts(cells)))
@@ -201,16 +208,17 @@ object Incremental {
     val cells = base.cells.join(dctx, Seq("ctx"), "left_anti").unionByName(merged)
 
     // The merged summaries are the NEW model state — cached like
-    // `fromCells`' (and like `sparsePairs`' result), so repeated
-    // consumers fold the delta once per session, not once per action.
+    // `fromCells`', so repeated consumers fold the delta once per
+    // session, not once per action.
     Stats(cells, Caches.cacheOnce(items), Caches.cacheOnce(co), n)
   }
 
-  /** Correlation pairs from a snapshot — identical arithmetic (and
-    * therefore identical binary64 output) to `Correlation.sparsePairs`
-    * over the equivalent full crosstab. */
+  /** Correlation pairs from a snapshot: co-occurring pairs, symmetric,
+    * self excluded. The result is session-cached — several queries consume
+    * the same pair table (raw, top-k, matrix export), and CacheManager
+    * dedups by canonical plan, so they share one materialization. */
   def pairs(stats: Stats): DataFrame =
-    Correlation.pairsFromStats(stats.items, stats.co, stats.n)
+    Caches.cacheOnce(Correlation.pairsFromStats(stats.items, stats.co, stats.n))
 
   /** Persist a snapshot as four parquet tables under `path`. */
   def save(stats: Stats, path: String): Unit = {

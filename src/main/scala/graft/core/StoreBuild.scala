@@ -77,10 +77,10 @@ object StoreBuild {
    *    no single-partition stage anywhere, plan-shape-guarded) and
    *    shuffled stats joins instead of broadcasts.
    */
-  def scaledNeighbors(crosstab0: DataFrame, k: Double = 2.0,
+  def scaledNeighbors(crosstab: DataFrame, k: Double = 2.0,
                       largeCatalog: Option[Boolean] = None,
                       itemPredicate: Option[Column] = None): DataFrame =
-    fromCrosstab(crosstab0, k, largeCatalog, itemPredicate, None).neighbors
+    new Build(Incremental.fromCells(crosstab), k, largeCatalog, itemPredicate).neighbors
 
   /** All-items store build from a SUFFICIENT-STATISTICS snapshot
     * (`Incremental.Stats`) — the incremental-ingest composition: after a
@@ -103,25 +103,7 @@ object StoreBuild {
   def scaledNeighborsFromStats(stats: Incremental.Stats, k: Double = 2.0,
                                largeCatalog: Option[Boolean] = None,
                                touched: Option[DataFrame] = None): DataFrame =
-    new Build(pinPlan(stats.items), pinPlan(stats.co), pinPlan(stats.n),
-      k, largeCatalog, None, touched).neighbors
-
-  /** Cache a folded summary AND seal its lineage behind a leaf scan.
-    *
-    * An in-session `Incremental.update` produces summaries whose LOGICAL
-    * plans reference the base snapshot's plans several times over; a
-    * build that embeds those subtrees per consumer hands Catalyst a
-    * multi-megabyte tree to analyze on EVERY action (measured: the
-    * in-session q57 build planned 13k Exchange nodes / a 15.6 MB plan
-    * string where the same data loaded from a saved snapshot planned 95
-    * — the data was cached either way; the DRIVER was re-walking the
-    * fold's plan). The lazy local checkpoint truncates the lineage to
-    * the materialized partitions, so the build plans against three leaf
-    * scans, like the loaded-snapshot path. Local (non-reliable)
-    * checkpointing is the right tier: the summaries are cached
-    * MEMORY_AND_DISK anyway, and a lost executor re-runs the fold —
-    * durability across failures is `Incremental.save`'s job. */
-  private def pinPlan(df: DataFrame): DataFrame = Caches.pinPlan(df)
+    new Build(stats, k, largeCatalog, None, touched).neighbors
 
   /** OP-20 at scale: per-item mean/σ of the COMPLETE correlation vector
     * (NULL-skipping, sample σ — exactly `avg`/`stddev_samp` over
@@ -131,23 +113,14 @@ object StoreBuild {
     * (den = 0: NULL correlation everywhere) keep their row with NULL
     * moments, matching the windowed pipeline's aggregate-over-all-NULLs.
     * Output: (item_a, mean_corr, std_corr). */
-  def vectorMoments(crosstab0: DataFrame,
+  def vectorMoments(crosstab: DataFrame,
                     itemPredicate: Option[Column] = None,
                     largeCatalog: Option[Boolean] = None): DataFrame =
-    fromCrosstab(crosstab0, 2.0, largeCatalog, itemPredicate, None).moments
+    new Build(Incremental.fromCells(crosstab), 2.0, largeCatalog, itemPredicate).moments
 
-  private def fromCrosstab(crosstab0: DataFrame, k: Double,
-                           largeCatalog: Option[Boolean],
-                           itemPredicate: Option[Column],
-                           itemSet: Option[DataFrame]): Build = {
-    val ct = Caches.cacheOnce(crosstab0)
-    new Build(Correlation.itemStats(ct),
-      Caches.cacheOnce(Correlation.sparseCoMoments(ct)),
-      Correlation.nContexts(ct), k, largeCatalog, itemPredicate, itemSet)
-  }
-
-  /** The shared build: per-item stats (item, sx, sxx), upper-triangle
-    * co-moments (item_a, item_b, sxy), 1-row context count.
+  /** The shared build over a snapshot's per-item stats (item, sx, sxx),
+    * upper-triangle co-moments (item_a, item_b, sxy) and 1-row context
+    * count.
     *
     * `itemPredicate` (over column `item`, like `Correlation.fullPairs`)
     * restricts the item_a SIDE ONLY — each selected item still scales and
@@ -162,11 +135,22 @@ object StoreBuild {
     * Partner stats, globals (ΣU/ΣV/|D|), and the zero-partner u-ranking
     * remain catalog-wide: they are what the closed form needs to stand in
     * for the absent dense vectors. */
-  private final class Build(itemSt: DataFrame, co0: DataFrame, n0: DataFrame,
+  private final class Build(snapshot: Incremental.Stats,
                             k: Double, largeCatalog: Option[Boolean],
                             itemPredicate: Option[Column],
                             itemSet: Option[DataFrame] = None) {
-    val n1 = n0 // 1 row
+    // Every summary enters the build cached AND sealed behind a leaf scan
+    // (`Caches.pinPlan`). An in-session `Incremental.update` produces
+    // summaries whose logical plans reference the base snapshot's plans
+    // several times over; a build that embeds those subtrees per consumer
+    // hands Catalyst a multi-megabyte tree to analyze on EVERY action
+    // (measured: the in-session q57 build planned 13k Exchange nodes / a
+    // 15.6 MB plan string where the same data loaded from a saved
+    // snapshot planned 95). Sealed, the build plans against three leaf
+    // scans whatever produced the snapshot.
+    private val itemSt = Caches.pinPlan(snapshot.items)
+    private val co = Caches.pinPlan(snapshot.co)
+    private val n = Caches.pinPlan(snapshot.n) // 1 row
 
     // item_a-side restriction, Column- or set-valued: the set form
     // (single-column `item` frame) is the delta-refresh face — a
@@ -181,7 +165,7 @@ object StoreBuild {
 
     // Per-item stats with den/u; D = non-degenerate items (den > 0).
     val d = Caches.cacheOnce(
-      itemSt.crossJoin(broadcast(n1))
+      itemSt.crossJoin(broadcast(n))
         .withColumn("den", sqrt(col("n") * col("sxx") - col("sx") * col("sx")))
         .where(col("den") > 0.0)
         .withColumn("u", col("sx") / col("den")))
@@ -204,12 +188,8 @@ object StoreBuild {
     // candidate set stay broadcast at any scale).
     def bcCat(df: DataFrame): DataFrame = if (large) df else broadcast(df)
 
-    def corrCol(sxy: Column): Column = {
-      val den = sqrt(col("n") * col("sxx_a") - col("sx_a") * col("sx_a")) *
-        sqrt(col("n") * col("sxx_b") - col("sx_b") * col("sx_b"))
-      when(den === 0.0 || isnan(den), lit(null).cast("double"))
-        .otherwise((col("n") * sxy - col("sx_a") * col("sx_b")) / den)
-    }
+    def pearson(sxy: Column): Column = Correlation.corrExpr(col("n"), sxy,
+      col("sx_a"), col("sxx_a"), col("sx_b"), col("sxx_b"))
 
     val da = d.select(col("item").as("item_a"), col("sx").as("sx_a"),
       col("sxx").as("sxx_a"), col("u").as("u_a"))
@@ -217,11 +197,10 @@ object StoreBuild {
       col("sxx").as("sxx_b"), col("u").as("u_b"))
 
     // Sparse side: the UPPER-TRIANGLE co-moments arrive persisted (the
-    // expensive ctx self-join, cached by the caller) — the narrowest
+    // expensive ctx self-join, cached by the snapshot) — the narrowest
     // table that every consumer can rebuild its view from with
     // broadcast-only work. The symmetric closure and stat joins are
     // recomputed per consumer: map-side, no shuffle.
-    val co = co0
     val sym = co.unionByName(
       co.select(col("item_b").as("item_a"), col("item_a").as("item_b"), col("sxy")))
     // The symmetric closure restricted to selected item_a (semi-join on the
@@ -242,9 +221,9 @@ object StoreBuild {
     // cache it derives from.
     val sp = Caches.cacheOnce(symA.join(bcCat(da), Seq("item_a"))
       .join(bcCat(db), Seq("item_b"))
-      .crossJoin(broadcast(n1))
+      .crossJoin(broadcast(n))
       .select(col("item_a"), col("item_b"), col("u_b"),
-        corrCol(col("sxy")).as("corr")))
+        pearson(col("sxy")).as("corr")))
 
     // Global u-ranking of D. r is descending in u; the ascending rank of
     // the same row is cntD+1−r, so ONE ranking serves both extrema.
@@ -380,7 +359,7 @@ object StoreBuild {
       * (dropped from D) are restored with NULL moments — the windowed
       * pipeline aggregates their all-NULL vectors to NULL, not absence. */
     def moments: DataFrame = {
-      val degenerate = itemSt.crossJoin(broadcast(n1))
+      val degenerate = itemSt.crossJoin(broadcast(n))
         .where(col("n") * col("sxx") - col("sx") * col("sx") <= 0.0)
       val degSel = restrictItems(degenerate)
         .select(col("item").as("item_a"),
@@ -429,7 +408,7 @@ object StoreBuild {
             (col("isConst") ||
               (-col("u_a") * col("u_b") >= rawThr - abs(rawThr) * 1e-9 - lit(1e-12))))
           .join(sym.select(col("item_a"), col("item_b")), Seq("item_a", "item_b"), "left_anti")
-          .withColumn("corr", corrCol(lit(0.0)))
+          .withColumn("corr", pearson(lit(0.0)))
           .where(passes)
           .select(col("item_a").as("item_a_id"), col("item_b").as("item_b_id"),
             scaledScore.as("scaled_score"))

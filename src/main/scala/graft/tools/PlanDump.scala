@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev tool: dump `.explain("formatted")` for selected SparkEntry queries
@@ -14,7 +13,6 @@ import java.nio.file.{Files, Paths}
   * dumped plan is the plan the timed run sees. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    graft.core.Scratch.pinTmpdir()
     val outDir = args(0)
     val suffix = args(1)
     val names: Seq[String] =
@@ -22,17 +20,7 @@ object PlanDump {
       else graft.SparkEntry.queries.keys.toSeq.sorted
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.local.dir", graft.core.Scratch.localDir)
-      .config("spark.sql.warehouse.dir", graft.core.Scratch.warehouseDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.start(s"local[$cpus]", cpus.toInt)
     Files.createDirectories(Paths.get(outDir))
     for (name <- names) {
       graft.SparkEntry.queries.get(name) match {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -44,15 +44,8 @@ object ScaleData {
     // hop: sf1 keys already span copies×Stride, so shift by Stride×(the
     // src's own copy count) to keep per-copy key spaces disjoint.
     val strideMult = if (args.length == 4) args(3).toLong else 1L
-    graft.core.Scratch.pinTmpdir()
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.local.dir", graft.core.Scratch.localDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.start(
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]", 32)
 
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
     def write(df: DataFrame, t: String): Unit =

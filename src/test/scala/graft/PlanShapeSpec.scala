@@ -50,6 +50,45 @@ class PlanShapeSpec extends SparkSpec {
     "BroadcastHashJoin".r.findAllIn(p).length should be >= 2
   }
 
+  /** Distinct join operators keyed on `ctx` in an executed frame's plan,
+    * by reference identity. The walk descends into AQE stages, reused
+    * exchanges and the plans of the cached relations the frame scans. */
+  private def ctxJoinsRun(df: DataFrame): Int = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    def identitySet() = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
+    val seen = identitySet()
+    val joins = identitySet()
+    def walk(p: SparkPlan): Unit = if (seen.add(p)) {
+      p match {
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+        case s: QueryStageExec => walk(s.plan)
+        case r: ReusedExchangeExec => walk(r.child)
+        case m: InMemoryTableScanExec => walk(m.relation.cachedPlan)
+        case j: BaseJoinExec if j.leftKeys.exists(_.references.exists(_.name == "ctx")) =>
+          joins.add(j)
+        case _ =>
+      }
+      p.children.foreach(walk)
+      p.subqueries.foreach(walk)
+    }
+    df.collect()
+    walk(df.queryExecution.executedPlan)
+    joins.size
+  }
+
+  test("the chain runs its ctx self-join once: sparsePairs and SimilarityModel.pairs") {
+    // a fixture no other spec builds, so no earlier cache stands in for it
+    val occ = (0 until 60).map(i => (9000L + i % 7, 5000L + i / 3))
+      .toDF("item_id", "reference_id")
+    ctxJoinsRun(Correlation.sparsePairs(Crosstab.build(occ))) shouldBe 1
+    ctxJoinsRun(graft.api.SimilarityModel.fit(occ).pairs) shouldBe 1
+  }
+
   test("SRP-blocked near-dup plans a HASH join on the bucket key, not a nested loop") {
     val embs = Seq((1L, Seq(1.0f, 2.0f)), (2L, Seq(2.0f, 1.0f)), (3L, Seq(1.0f, 2.1f)))
       .toDF("vec_id", "embedding")

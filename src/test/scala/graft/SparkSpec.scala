@@ -10,23 +10,11 @@ import org.scalatest.matchers.should.Matchers
   * session concern, not an engine concern. */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    graft.core.Scratch.pinTmpdir()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.local.dir", graft.core.Scratch.localDir)
-      .config("spark.sql.warehouse.dir", graft.core.Scratch.warehouseDir)
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // plan-shape specs assert on full scan paths; the repo-local
-      // scratch root is long enough that the default 100-char metadata
-      // truncation would cut them mid-path
-      .config("spark.sql.maxMetadataStringLength", "2000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = graft.core.Session.start("local[4]", 4)
+    // plan-shape specs assert on full scan paths; the repo-local
+    // scratch root is long enough that the default 100-char metadata
+    // truncation would cut them mid-path
+    s.conf.set("spark.sql.maxMetadataStringLength", "2000")
     s
   }
 }
