@@ -1,7 +1,7 @@
 package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import graft.core.{Correlation, Crosstab, Incremental, Neighbors}
+import graft.core.{Caches, Correlation, Crosstab, Incremental, Neighbors}
 import graft.store.{Serving, SimilarityStore}
 
 /**
@@ -60,16 +60,33 @@ object SimilarityModel {
     (fromStats(next), next)
   }
 
-  /** Serving handle over a persisted store (EP-3). */
+  /** Serving handle over a persisted store (EP-3). On first use it pins
+    * two session caches: the dictionary, and the pair table joined once
+    * with its keys (`Serving.keyNeighbors`, in the store file's item_a_id
+    * order). A lookup is then one job over cached batches that skips
+    * batches by their item_a_id bounds.
+    *
+    * The handle serves the store as of its first use, except that a
+    * rewrite through this session's writer is re-cached (Spark re-caches
+    * every cached plan over a path it writes). After a rewrite by another
+    * process, open a new handle: its first use refreshes the cached files
+    * under `path`, for the live handles on that path too, which share
+    * its caches. `close()` releases both caches. */
   final case class Store(spark: SparkSession, path: String) {
-    private lazy val sim = SimilarityStore.readSimilarItems(spark, path)
-    private lazy val dict = SimilarityStore.readCorrelatedItems(spark, path)
+    private lazy val dict = {
+      spark.catalog.refreshByPath(path)
+      Caches.cacheOnce(SimilarityStore.readCorrelatedItems(spark, path))
+    }
+    private lazy val keyed = Caches.cacheOnce(
+      Serving.keyNeighbors(SimilarityStore.readSimilarItems(spark, path), dict))
     def retrieve(itemId: Long, limit: Option[Int] = None): DataFrame =
-      Serving.retrieveSimilarItems(sim, dict, itemId, limit)
+      Serving.neighborsOf(keyed, itemId, limit)
     def itemInfo(ids: Seq[Long]): DataFrame = Serving.getItemInfo(dict, ids)
     def search(term: String, limit: Int = 10): DataFrame =
       Serving.searchItemsByName(dict, term, limit)
-    def stats: DataFrame = Serving.databaseStats(sim, dict)
+    def stats: DataFrame = Serving.databaseStats(keyed, dict)
+    /** Release the handle's caches. */
+    def close(): Unit = { Caches.release(keyed); Caches.release(dict) }
   }
 }
 
@@ -121,11 +138,20 @@ final class SimilarityModel private (val crosstab: DataFrame,
     * `data.py:116-149`) via the closed-form zero-pair decomposition —
     * identical output to `storeIn(path, dict, lit(true))` but never
     * materializes the I×I matrix (see `core.StoreBuild`). The production
-    * full-catalog build. */
+    * full-catalog build.
+    *
+    * The build's own caches and plan seals are released once the store is
+    * written (`Caches.scoped`): a refresh after every ingest delta would
+    * otherwise pin a new set per delta that nothing reads again. The
+    * model's `stats` are forced first, outside the scope, so a fitted
+    * model keeps its snapshot cached for `pairs`/`topK`. */
   def storeAllIn(path: String, dictionary: DataFrame, k: Double = 2.0): Unit = {
-    SimilarityStore.writeCorrelatedItems(dictionary, path)
-    SimilarityStore.writeSimilarItems(
-      graft.core.StoreBuild.scaledNeighborsFromStats(stats, k), path)
+    val snapshot = stats
+    Caches.scoped {
+      SimilarityStore.writeCorrelatedItems(dictionary, path)
+      SimilarityStore.writeSimilarItems(
+        graft.core.StoreBuild.scaledNeighborsFromStats(snapshot, k), path)
+    }
   }
 
   /** `save_correlation_matrix` parity (OP-04) — long-form pairs, CSV. */

@@ -21,25 +21,34 @@ import org.apache.spark.storage.StorageLevel
 object Caches {
 
   // Thread-local scope stack for `scoped`: cacheOnce registers each plan
-  // it NEWLY persisted (never one it found already cached) so the scope
-  // can release exactly its own caches on exit.
-  private val scope = new ThreadLocal[scala.collection.mutable.Buffer[DataFrame]]
+  // it NEWLY persisted (never one it found already cached), and pinPlan
+  // each memo entry it NEWLY sealed, so the scope can release exactly its
+  // own state on exit.
+  private final class Scope {
+    val caches = scala.collection.mutable.Buffer.empty[DataFrame]
+    val pins = scala.collection.mutable.Buffer.empty[DataFrame]
+  }
+  private val scope = new ThreadLocal[Scope]
 
   /** Persist MEMORY_AND_DISK unless an equal plan is already cached. */
   def cacheOnce(df: DataFrame): DataFrame =
     if (df.storageLevel == StorageLevel.NONE) {
       val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-      Option(scope.get()).foreach(_ += p)
+      Option(scope.get()).foreach(_.caches += p)
       p
     } else df
 
   /** Run `body`, then release ONLY the caches `cacheOnce` created inside
-    * it (on this thread). The micro-batch discipline for long-lived
-    * sessions: a streaming `foreachBatch` must not leak per-batch caches,
-    * but `clearAll` would also evict caches owned by concurrent serving
-    * queries on the same session — `scoped` releases the batch's own
-    * handles and nothing else. Nests: an inner scope releases its caches
-    * and restores the outer scope's tracking.
+    * it (on this thread), and drop the `pinPlan` seals made inside it:
+    * their memo entries and their checkpoint blocks. The micro-batch
+    * discipline for long-lived sessions: a streaming `foreachBatch` or a
+    * store refresh must not leak per-batch state (every batch reads new
+    * files, so nothing it pinned is ever reused), but `clearAll` would
+    * also evict caches owned by concurrent serving queries on the same
+    * session — `scoped` releases the batch's own handles and nothing
+    * else. A frame sealed inside the scope must not be used after it:
+    * its checkpoint blocks are gone. Nests: an inner scope releases its
+    * state and restores the outer scope's tracking.
     *
     * CONTRACT: tracking is THREAD-CONFINED (a plain ThreadLocal, and the
     * buffer itself is not thread-safe) — every `cacheOnce` that should be
@@ -50,12 +59,13 @@ object Caches {
     * either scope per worker thread or release its caches explicitly. */
   def scoped[T](body: => T): T = {
     val prev = scope.get()
-    val buf = scala.collection.mutable.Buffer.empty[DataFrame]
-    scope.set(buf)
+    val mine = new Scope
+    scope.set(mine)
     try body
     finally {
       scope.set(prev)
-      buf.foreach(release)
+      mine.pins.foreach(unpin)
+      mine.caches.foreach(release)
     }
   }
 
@@ -97,7 +107,20 @@ object Caches {
       case None =>
         val pinned = cacheOnce(df).localCheckpoint(eager = false)
         buf += ((canon, pinned))
+        Option(scope.get()).foreach(_.pins += pinned)
         pinned
+    }
+  }
+
+  /** Forget one pinPlan seal and drop its checkpoint blocks. */
+  private def unpin(pinned: DataFrame): Unit = synchronized {
+    Option(pins.get(pinned.sparkSession)).foreach { buf =>
+      val i = buf.indexWhere(_._2 eq pinned)
+      if (i >= 0) buf.remove(i)
+    }
+    pinned.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
     }
   }
 

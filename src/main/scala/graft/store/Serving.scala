@@ -7,11 +7,19 @@ import org.apache.spark.sql.functions._
  * Serving reads over the similarity store (SURVEY §2: OP-13..17, OP-22/23,
  * OP-25, OP-29, OP-31; reference `/root/reference/propius/data.py:217-359`).
  *
- * Each read is a declarative plan Catalyst compiles to the index-like shape
- * the reference gets from SQLite: partition/row-group pruning for the point
- * lookup, broadcast hash join for the small dictionary, and
- * TakeOrderedAndProject for ORDER BY … LIMIT (true distributed top-k —
- * never a full sort).
+ * Each read is a declarative plan: a pushed-down point-lookup filter, a
+ * broadcast hash join for the small dictionary, and TakeOrderedAndProject
+ * for ORDER BY … LIMIT (true distributed top-k — never a full sort).
+ *
+ * Over the parquet files, row-group statistics prune a point lookup only
+ * when the store spans several row groups. The writer's hash repartition
+ * plus AQE coalescing leaves a small store as one file with one row
+ * group, which every lookup reads whole. The serving handle
+ * (`SimilarityModel.Store`) is where pruning happens: it caches
+ * `keyNeighbors` once, in the store file's item_a_id order, and
+ * `neighborsOf` then skips in-memory batches by their item_a_id min/max
+ * statistics. A limited lookup is one job over cached batches, with no
+ * file scan and no join.
  */
 object Serving {
 
@@ -21,15 +29,33 @@ object Serving {
    * SQL shape: `SELECT si.item_b_id, ci.key, si.scaled_score FROM
    * similar_items si JOIN correlated_items ci ON si.item_b_id = ci.id
    * WHERE si.item_a_id = ? ORDER BY scaled_score DESC [LIMIT n]`.
+   * The key join and the per-item lookup are the two halves below; the
+   * optimizer pushes the item_a_id filter through the join to the scan.
    */
   def retrieveSimilarItems(similarItems: DataFrame, correlatedItems: DataFrame,
-                           itemId: Long, limit: Option[Int] = None): DataFrame = {
-    val joined = similarItems
-      .where(col("item_a_id") === lit(itemId)) // OP-14: pruned point lookup
-      .join(broadcast(correlatedItems), col("item_b_id") === col("id")) // OP-16
+                           itemId: Long, limit: Option[Int] = None): DataFrame =
+    neighborsOf(keyNeighbors(similarItems, correlatedItems), itemId, limit)
+
+  /** The pair table with each neighbor's dictionary key attached:
+    * (item_a_id, item_b_id, key, scaled_score, known). A left join, so
+    * every store row stays (`databaseStats` counts them all); `known` is
+    * false for a neighbor missing from the dictionary, which `neighborsOf`
+    * drops as the reference's inner join does. The dictionary side is
+    * broadcast (OP-16), so rows keep the pair table's order. */
+  def keyNeighbors(similarItems: DataFrame, correlatedItems: DataFrame): DataFrame =
+    similarItems
+      .join(broadcast(correlatedItems), col("item_b_id") === col("id"), "left")
+      .select(col("item_a_id"), col("item_b_id"), col("key"), col("scaled_score"),
+        col("id").isNotNull.as("known"))
+
+  /** One item's named neighbors from a `keyNeighbors` table, best first
+    * (OP-14 point lookup, OP-24 order, OP-26 limit). */
+  def neighborsOf(keyed: DataFrame, itemId: Long, limit: Option[Int] = None): DataFrame = {
+    val ranked = keyed
+      .where(col("item_a_id") === lit(itemId) && col("known"))
       .select(col("item_b_id"), col("key"), col("scaled_score"))
-      .orderBy(col("scaled_score").desc, col("item_b_id").asc) // OP-24
-    limit.map(joined.limit).getOrElse(joined) // OP-26
+      .orderBy(col("scaled_score").desc, col("item_b_id").asc)
+    limit.map(ranked.limit).getOrElse(ranked)
   }
 
   /** `get_item_info` (`data.py:253-278`): dictionary rows for an id set

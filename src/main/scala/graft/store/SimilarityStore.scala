@@ -12,10 +12,15 @@ import org.apache.spark.sql.functions._
  * per-item `executemany` round-trips (`data.py:90-214`).
  *
  * Spark-first: both tables are parquet directories written in ONE bulk job
- * each. The SQLite unique indexes become physical layout: `similar_items`
- * is repartitioned and sorted by item_a_id so parquet row-group min/max
- * statistics prune point lookups (the index-like access path, SURVEY §4);
- * at warehouse scale the same call writes bucketed tables. "DDL" is
+ * each. `similar_items` is hash-repartitioned on item_a_id and sorted
+ * within each file by (item_a_id, item_b_id). That layout prunes point
+ * lookups only once a store spans many row groups: AQE coalesces a small
+ * store's shuffle into one file with one row group (the benchmark's
+ * 75,935-row store), which a parquet point lookup reads whole. The
+ * serving handle (`SimilarityModel.Store`) stands in for the reference's
+ * SQLite index: it caches the table in this item_a_id order and skips
+ * in-memory batches by their item_a_id bounds. At warehouse
+ * scale `writeSimilarItemsBucketed` writes a bucketed table. "DDL" is
  * `mode("overwrite")`.
  */
 object SimilarityStore {
@@ -31,8 +36,9 @@ object SimilarityStore {
         lit(null).cast("string").as("human_label"))
       .write.mode("overwrite").parquet(s"$storePath/$CorrelatedItems")
 
-  /** OP-06+08: write the thresholded pair table, laid out for per-item
-    * point lookups (sorted within files by item_a_id → row-group pruning). */
+  /** OP-06+08: write the thresholded pair table, sorted within files by
+    * item_a_id (row-group pruning needs several row groups per file; see
+    * the object comment for what a small store gets). */
   def writeSimilarItems(pairs: DataFrame, storePath: String,
                         numPartitions: Int = 0): Unit = {
     val p = pairs.select(col("item_a_id").cast("long"),
@@ -49,7 +55,7 @@ object SimilarityStore {
    * `bucketBy(item_a_id)` + in-bucket sort. Serving joins, self-joins,
    * and repeated aggregations on item_a_id are then co-partitioned at
    * read time: no Exchange in the plan (guarded by the spec). This is
-   * what the parquet-dir layout's row-group sorting becomes once a table
+   * what the parquet-dir layout's item_a_id sort becomes once a table
    * catalog is available (at 100 TB: the store is a warehouse table, not
    * a directory).
    */
